@@ -26,15 +26,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sales_data_pipeline_gcp_spark.io import fan_out, load
+from sales_data_pipeline_gcp_spark.operators.core import materialize
 from sales_data_pipeline_gcp_spark.operators.dedup import (
     _JACCARD_PAIRS_SQL,
     _SHINGLES_SQL,
     JACCARD_THRESHOLD,
-    fan_out,
-    materialize,
     neardup_pairs,
 )
-from sales_data_pipeline_gcp_spark.io import load
 from sales_data_pipeline_gcp_spark.plans.registry import register
 
 MAX_ITERATIONS = 20
@@ -85,46 +84,37 @@ def connected_components(
     raise RuntimeError(f"connected_components did not converge in {max_iterations} iterations")
 
 
-def _large_star(
-    e: DataFrame, *, input_oriented: bool = False, dedup_output: bool = True
-) -> DataFrame:
+def _large_star(e: DataFrame) -> DataFrame:
     """One large-star round: for every node u, connect each STRICTLY LARGER
     neighbor v to m(u) = min(neighbors(u) + {u}). Every undirected edge is
     processed from its smaller endpoint's perspective; output edges are
     oriented child > parent (u > v strictly: v = m(u_old) <= u_old < u).
 
-    ``input_oriented=True`` asserts the caller's edge set is DISTINCT and
-    strictly oriented u > v — then the symmetrized union cannot contain
-    duplicates (the two branches live in disjoint half-planes) and the
-    symmetrization ``distinct`` (one full 2|E| exchange) is skipped.
-    ``dedup_output=False`` skips the output ``distinct`` for callers whose
-    next operation re-deduplicates anyway (``_small_star`` starts with
-    one). Both flags exist for the contraction loop (guide §2.4: remove
-    shuffles outright); default behavior is unchanged for arbitrary input.
-    With ``dedup_output=True`` the output is duplicate-free — the
-    invariant the loop's cheap set-equality fixpoint test consumes."""
+    Precondition: ``e`` is DISTINCT and strictly oriented u > v — the
+    contraction loop's initial edge set and ``_small_star``'s output
+    (property-tested in tests/test_dedup_property.py). The symmetrized
+    union then cannot contain duplicates (its two branches live in
+    disjoint half-planes), so it needs no ``distinct``. The output is NOT
+    deduplicated: the only caller feeds it straight into ``_small_star``,
+    which starts with one (guide §2.4: remove shuffles outright)."""
     from pyspark.sql import Window as W
 
     sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    # ONE u-keyed exchange feeds everything below (guide §2.4: operations
-    # keyed the same way share an exchange): HashPartitioning(u) satisfies
-    # the distinct's (u,v) clustering AND the window's u clustering, and
-    # m(u) = min over the u-partition is a WINDOW, not a groupBy+self-join
-    # — the join formulation re-executed the whole upstream once per join
-    # side (broadcast build) and cost 2 extra exchanges + a broadcast job
-    # per call (round-13 plan probe: 10 Exchange / 4 BroadcastHashJoin for
-    # one fused round; the window form plans 3 Exchange / 0 joins).
-    sym = sym.repartition("u")
-    if not input_oriented:
-        sym = sym.distinct()
+    # ONE u-keyed exchange feeds the m(u) window (guide §2.4: operations
+    # keyed the same way share an exchange): m(u) = min over the
+    # u-partition is a WINDOW, not a groupBy+self-join — the join
+    # formulation re-executed the whole upstream once per join side
+    # (broadcast build) and cost 2 extra exchanges + a broadcast job per
+    # call (round-13 plan probe: 10 Exchange / 4 BroadcastHashJoin for one
+    # fused round; the window form plans 3 Exchange / 0 joins).
     m = F.least(F.min("v").over(W.partitionBy("u")), F.col("u"))
-    out = (
-        sym.withColumn("m", m)
+    return (
+        sym.repartition("u")
+        .withColumn("m", m)
         .filter(F.col("v") > F.col("u"))
         .select(F.col("v").alias("u"), F.col("m").alias("v"))
         .filter(F.col("u") != F.col("v"))
     )
-    return out.distinct() if dedup_output else out
 
 
 def _small_star(e: DataFrame) -> DataFrame:
@@ -179,16 +169,10 @@ def connected_components_star(
     cur = e
     n_cur = cur.count()
     for _ in range(max_rounds):
-        # loop-body fusion (guide §2.4, round 13): ``cur`` is always
-        # DISTINCT and strictly oriented u > v (the initial greatest/least
-        # distinct, then _small_star's output invariant), so _large_star
-        # skips its symmetrization distinct, and its output distinct is
-        # skipped because _small_star immediately re-deduplicates — two
-        # full edge-set exchanges (= two AQE stage-jobs) removed per round.
-        nxt = materialize(
-            _small_star(_large_star(cur, input_oriented=True, dedup_output=False)),
-            label="cc_star_round",
-        )
+        # ``cur`` is always DISTINCT and strictly oriented u > v (the
+        # initial greatest/least distinct, then _small_star's output) —
+        # exactly _large_star's precondition
+        nxt = materialize(_small_star(_large_star(cur)), label="cc_star_round")
         # set-equality fixpoint test, cheapened (guide §2.4): both rounds'
         # edge sets are ``.distinct()`` outputs, so equality ⇔ equal
         # cardinality AND empty one-sided difference. Counting the (already

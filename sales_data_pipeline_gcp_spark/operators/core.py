@@ -36,3 +36,34 @@ def dedup_by_key(df: DataFrame, keys: list[str], order_by: list[Column]) -> Data
     row, non-reproducible under retries/partition order at scale)."""
     w = W.partitionBy(*keys).orderBy(*order_by)
     return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
+
+
+def materialize(df: DataFrame, label: str | None = None) -> DataFrame:
+    """Cut a reused subtree out of every downstream branch: eager
+    ``localCheckpoint`` computes it ONCE and replaces the lineage with the
+    stored partitions. Spark does no cross-branch subtree reuse, so without
+    this the LSH self-joins execute the signature stage on BOTH sides and
+    the verify joins re-derive the shingle stage — the most expensive
+    stage of the pipeline running 2-6x (the round-2 bench outlier's
+    structural amplifier). This is the engine's only checkpoint call.
+
+    The checkpoint's Spark jobs run under the job description ``label``
+    (``"materialize"`` when none is given), so the status store and the UI
+    show which checkpoint each job belongs to; the previous description is
+    restored afterwards and the job group is never touched.
+    ``tools/dump_plans.py --iter`` names its pre-checkpoint plan dumps from
+    the same description.
+
+    Scale note: everything checkpointed in the minhash pipeline is one row
+    per DOC (shingle arrays, k-long signatures) — never the corpus-sized
+    exploded occurrence stream (round-4 restructure; checkpointing the
+    exploded stream more than doubled wall time at sf0.1). On a real
+    cluster ``checkpoint()`` to HDFS/object storage survives executor loss;
+    localCheckpoint is the single-node analog."""
+    sc = df.sparkSession.sparkContext
+    previous = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label or "materialize")
+    try:
+        return df.localCheckpoint(eager=True)
+    finally:
+        sc.setJobDescription(previous)

@@ -22,8 +22,6 @@ idea as stopword removal).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -33,7 +31,8 @@ from sales_data_pipeline_gcp_spark.functions.hashing import (
     sql_shared_hash,
     sql_shared_hash32,
 )
-from sales_data_pipeline_gcp_spark.io import load
+from sales_data_pipeline_gcp_spark.io import fan_out, load
+from sales_data_pipeline_gcp_spark.operators.core import materialize
 from sales_data_pipeline_gcp_spark.plans.registry import register
 
 # ---------------------------------------------------------------------------
@@ -73,55 +72,6 @@ shingles AS (
 """
 
 
-# fan_out moved to io.py (round 12) so every operator family can use it;
-# re-exported here for the existing dedup/corpus/components import sites.
-from sales_data_pipeline_gcp_spark.io import fan_out  # noqa: F401,E402
-
-#: execution-order counter for SPARK_GRAFT_PLAN_DUMP_DIR checkpoint dumps.
-_PLAN_DUMP_SEQ = 0
-
-
-def materialize(df: DataFrame, label: str | None = None) -> DataFrame:
-    """Cut a reused subtree out of every downstream branch: eager
-    ``localCheckpoint`` computes it ONCE and replaces the lineage with the
-    stored partitions. Spark does no cross-branch subtree reuse, so without
-    this the LSH self-joins execute the signature stage on BOTH sides and
-    the verify joins re-derive the shingle stage — the most expensive
-    stage of the pipeline running 2-6x (the round-2 bench outlier's
-    structural amplifier).
-
-    Plan evidence for iterative operators (round-12 VERDICT item 6): a
-    checkpoint REPLACES lineage, so a final ``explain`` of a loop's result
-    is a vacuous 3-node scan of the last checkpoint. When
-    ``SPARK_GRAFT_PLAN_DUMP_DIR`` is set, every materialize dumps the
-    PRE-checkpoint formatted plan of the subtree it is about to compute —
-    numbered in execution order, tagged with ``label`` where the caller
-    passes one — which is exactly the per-iteration loop-body plan
-    (tools/dump_plans.py --iter drives this).
-
-    Scale note: everything checkpointed in the minhash pipeline is one row
-    per DOC (shingle arrays, k-long signatures) — never the corpus-sized
-    exploded occurrence stream (round-4 restructure; checkpointing the
-    exploded stream more than doubled wall time at sf0.1). On a real
-    cluster ``checkpoint()`` to HDFS/object storage survives executor loss;
-    localCheckpoint is the single-node analog."""
-    dump_dir = os.environ.get("SPARK_GRAFT_PLAN_DUMP_DIR")
-    if dump_dir:
-        import contextlib
-        import io
-
-        global _PLAN_DUMP_SEQ
-        _PLAN_DUMP_SEQ += 1
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        os.makedirs(dump_dir, exist_ok=True)
-        tag = f"{_PLAN_DUMP_SEQ:02d}" + (f"_{label}" if label else "")
-        with open(os.path.join(dump_dir, f"ckpt_{tag}.txt"), "w") as f:
-            f.write(buf.getvalue())
-    return df.localCheckpoint(eager=True)
-
-
 def shingle_arrays(docs: DataFrame) -> DataFrame:
     """(doc_id, shs) with the doc's DISTINCT 3-word shingles as an IN-ROW
     array — the un-exploded form, for stages (minhash signatures) that can
@@ -152,10 +102,6 @@ def shingles_from(docs: DataFrame) -> DataFrame:
     """(doc_id, shingle) exploded distinct shingles — DataFrame twin of
     ``_SHINGLES_SQL``; the form pairwise-verification joins need."""
     return shingle_arrays(docs).select("doc_id", F.explode("shs").alias("shingle"))
-
-
-def doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return shingles_from(fan_out(load(spark, sf_dir, "documents")))
 
 
 _JACCARD_PAIRS_SQL = f"""
@@ -982,8 +928,9 @@ def _sql_rp_dot(vec: str, plane: list[int]) -> str:
 
 
 def rp_lsh_code(e: DataFrame, vec: str = "embedding") -> DataFrame:
-    """Append the RP_PLANES-bit sign-LSH code as ``code`` (long). The code
-    is a pure narrow map — at 100 TB this is one pass, no shuffle.
+    """Append the RP_PLANES-bit sign-LSH code as ``code`` (long), replacing
+    any existing ``code`` column. The code is a pure narrow map — at
+    100 TB this is one pass, no shuffle.
 
     Built as ONE SQL string (round 13, VERDICT item 7): the Column form
     constructed 32 planes x 64 sign literals through py4j (~2k round
@@ -1002,7 +949,9 @@ def rp_lsh_code(e: DataFrame, vec: str = "embedding") -> DataFrame:
             f"(CASE WHEN {dot} >= 0 THEN cast({1 << p} as bigint) "
             "ELSE cast(0 as bigint) END)"
         )
-    return e.selectExpr("*", " + ".join(terms) + " as code")
+    # drop first: ``selectExpr('*', ... as code)`` would otherwise emit a
+    # second ``code`` column next to an existing one instead of replacing it
+    return e.drop("code").selectExpr("*", " + ".join(terms) + " as code")
 
 
 @register(

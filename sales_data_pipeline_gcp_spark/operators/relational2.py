@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sales_data_pipeline_gcp_spark.functions.exact import exact_sum, sql_sum
+from sales_data_pipeline_gcp_spark.functions.exact import dec, exact_sum, sql_sum
 from sales_data_pipeline_gcp_spark.io import fan_out, load
 from sales_data_pipeline_gcp_spark.plans.registry import register
 
@@ -606,7 +606,8 @@ def q_agg_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY n_name
     )
     SELECT n_name, revenue,
-           revenue / SUM(revenue) OVER () AS revenue_share
+           revenue / CAST(CAST(SUM(CAST(revenue AS DECIMAL(38,2))) OVER () AS VARCHAR) AS DOUBLE)
+             AS revenue_share
     FROM nat
     ORDER BY revenue DESC, n_name
     """,
@@ -614,7 +615,9 @@ def q_agg_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     "then each group's share of the grand total via an empty-frame window "
     "SUM. The window runs over the 25-row aggregate — a single-partition "
     "window is only safe AFTER aggregation has collapsed the data (on the "
-    "fact table it would serialize; on |groups| rows it is free). Both "
+    "fact table it would serialize; on |groups| rows it is free). The "
+    "grand total is a decimal-exact sum too: a double window SUM adds the "
+    "25 revenues in arrival order, which depends on the core count. Both "
     "engines divide the same exact-decimal-derived doubles, so shares are "
     "bit-identical.",
     tags=("window",),
@@ -631,8 +634,9 @@ def q_window_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("n_name")
         .agg(exact_sum("o_totalprice", 2).alias("revenue"))
     )
+    total = F.sum(dec("revenue", 2)).over(W.partitionBy()).cast("string").cast("double")
     return (
-        nat.withColumn("revenue_share", F.col("revenue") / F.sum("revenue").over(W.partitionBy()))
+        nat.withColumn("revenue_share", F.col("revenue") / total)
         .orderBy(F.col("revenue").desc(), F.col("n_name").asc())
     )
 

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from sales_data_pipeline_gcp_spark.io import register_views
+from sales_data_pipeline_gcp_spark.operators.core import materialize
 from sales_data_pipeline_gcp_spark.plans.registry import register
 
 _SQL_REVENUE_BY_NATION = """
@@ -244,6 +245,6 @@ _SQL_CHAIN_OVER_VIEW = """
 )
 def q_sql_chained_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("orders",))
-    grown = spark.sql(_SQL_GROWN_PREFIX).localCheckpoint(eager=True)
+    grown = materialize(spark.sql(_SQL_GROWN_PREFIX), label="chained_grown")
     grown.createOrReplaceTempView("chained_grown")
     return spark.sql(_SQL_CHAIN_OVER_VIEW)

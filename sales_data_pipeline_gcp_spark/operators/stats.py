@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from sales_data_pipeline_gcp_spark.functions.exact import dec, exact_sum, sql_sum
 from sales_data_pipeline_gcp_spark.io import fan_out, load
+from sales_data_pipeline_gcp_spark.operators.core import materialize
 from sales_data_pipeline_gcp_spark.plans.registry import register
 
 N_BUCKETS = 10
@@ -443,7 +444,7 @@ def q_chisq_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = c.join(o, c["c_custkey"] == o["o_custkey"]).select(
         F.col("c_mktsegment").alias("seg"), F.col("o_orderpriority").alias("pri")
     )
-    joined = joined.localCheckpoint(eager=True)  # 4 aggregates share the join
+    joined = materialize(joined, label="chisq_joined")  # 4 aggregates share the join
     obs = joined.groupBy("seg", "pri").agg(F.count("*").alias("o"))
     rows_t = joined.groupBy("seg").agg(F.count("*").alias("rt"))
     cols_t = joined.groupBy("pri").agg(F.count("*").alias("ct"))

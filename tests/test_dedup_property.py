@@ -58,6 +58,7 @@ def test_jaccard_matches_python(spark, seed):
 import pytest
 
 from sales_data_pipeline_gcp_spark.operators.components import (
+    _small_star,
     connected_components,
     connected_components_star,
 )
@@ -117,13 +118,32 @@ def test_star_converges_on_long_chain_where_propagation_cannot(spark):
         connected_components(df, max_iterations=12)
 
 
+@settings(max_examples=6, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(st.integers(0, 2**31))
+def test_small_star_output_meets_large_star_precondition(spark, seed):
+    """``_large_star`` runs without a symmetrization or output distinct
+    because its input — the contraction loop's edge set, i.e.
+    ``_small_star``'s output — is duplicate-free and strictly oriented
+    u > v. That must hold whatever ``_small_star`` is fed: duplicates,
+    self-loops and both orientations of an edge."""
+    rng = random.Random(seed)
+    n = rng.randint(2, 12)
+    edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(rng.randint(1, 3 * n))]
+    edges += [(v, u) for u, v in edges[: len(edges) // 2 + 1]]  # both orientations
+    edges += edges[:3]  # duplicates
+    edges.append((rng.randrange(n),) * 2)  # a self-loop
+    out = [tuple(r) for r in _small_star(spark.createDataFrame(edges, "u long, v long")).collect()]
+    assert len(out) == len(set(out)), (seed, out)
+    assert all(u > v for u, v in out), (seed, out)
+
+
 # --- stop-shingle drop: semantics + skew bound under adversarial corpora ---
 
 from pyspark.sql import functions as F
 
+from sales_data_pipeline_gcp_spark.operators.core import materialize
 from sales_data_pipeline_gcp_spark.operators.dedup import (
     lsh_candidate_pairs,
-    materialize,
     minhash_signatures,
     drop_stop_shingles,
     shingle_arrays,
@@ -384,3 +404,56 @@ def test_triangles_lsh_matches_exact_variant(spark):
     assert lsh == exact
     # a<b<c orientation: each triangle exactly once
     assert all(a < b < c for a, b, c in lsh)
+
+
+def test_rp_lsh_code_replaces_an_existing_code_column(spark):
+    from sales_data_pipeline_gcp_spark.operators.dedup import EMBED_DIM, rp_lsh_code
+
+    vec = [float(i % 7 - 3) for i in range(EMBED_DIM)]
+    df = spark.createDataFrame([(1, vec, -1)], "vec_id long, embedding array<float>, code long")
+    coded = rp_lsh_code(df)
+    assert coded.columns == ["vec_id", "embedding", "code"]
+    assert coded.first().code == rp_lsh_code(df.drop("code")).first().code != -1
+
+
+# --- checkpoint seam: job-description labels and per-query plan dumps ------
+
+
+def test_dump_plans_iter_is_scoped_to_one_query(spark, tmp_path):
+    """``dump_plans --iter`` wraps ``localCheckpoint`` for one query only: a
+    query that raises after two checkpoints leaves the method restored (and
+    the caller's job description intact), and the next query's dumps
+    number from 01 again, each named after its ``materialize`` label."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from tools import dump_plans
+
+    original = DataFrame.localCheckpoint
+    sc = spark.sparkContext
+
+    def failing(spark, sf_dir):
+        df = spark.range(4)
+        materialize(df, label="first")
+        materialize(df)
+        raise RuntimeError("query failed")
+
+    def passing(spark, sf_dir):
+        return materialize(spark.range(4), label="only")
+
+    sc.setJobDescription("caller")
+    try:
+        with pytest.raises(RuntimeError, match="query failed"):
+            dump_plans.dump_query(spark, "q_fail", failing, "", str(tmp_path), "t", iters=True)
+        assert DataFrame.localCheckpoint is original
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setJobDescription(None)
+    assert sorted(p.name for p in (tmp_path / "q_fail_t_iters").iterdir()) == [
+        "ckpt_01_first.txt",
+        "ckpt_02_materialize.txt",
+    ]
+    dump_plans.dump_query(spark, "q_ok", passing, "", str(tmp_path), "t", iters=True)
+    assert DataFrame.localCheckpoint is original
+    assert [p.name for p in (tmp_path / "q_ok_t_iters").iterdir()] == ["ckpt_01_only.txt"]
+    assert "Range" in (tmp_path / "q_ok_t_iters" / "ckpt_01_only.txt").read_text()
+    assert (tmp_path / "q_ok_t.txt").exists()

@@ -528,8 +528,18 @@ def test_price_index_collapses_before_join(spark, sf_dir):
     plan = plan_str(QS["q_price_index"].fn(spark, sf_dir))
     aggs = re.findall(r"^\(\d+\) HashAggregate", plan, re.M)
     assert len(aggs) >= 4  # pm rollup (partial+final) + final month rollup
-    read = [l for l in plan.splitlines() if "ReadSchema" in l][0]
-    assert "l_comment" not in read and "l_returnflag" not in read
+    # the ReadSchema lines of the lineitem scans (a formatted-plan node's
+    # details are one blank-line-separated block), so the check cannot
+    # pass on another table's scan
+    reads = [
+        line
+        for block in plan.split("\n\n")
+        if "lineitem" in block
+        for line in block.splitlines()
+        if "ReadSchema" in line
+    ]
+    assert reads
+    assert all("l_comment" not in r and "l_returnflag" not in r for r in reads)
 
 
 def test_udtf_is_arrow_batched(spark, sf_dir):

@@ -1,11 +1,20 @@
 """Dump ``explain('formatted')`` for named queries to <out-dir>/<q>_<tag>.txt.
 
-Usage: python tools/dump_plans.py --out plans/r12 --tag after q_a q_b ...
+Usage: python tools/dump_plans.py --out plans/r12 --tag after [--iter] q_a q_b ...
 
 Plan evidence only — builds each DataFrame (no execution beyond what the
 query function itself runs, e.g. eager checkpoints/streams) and writes the
 formatted physical plan. Run from any checkout; imports the package next to
 this file's parent.
+
+A checkpoint replaces lineage, so the final plan of an iterative query is a
+vacuous scan of its last checkpoint. ``--iter`` also records the plan each
+checkpoint computes: while one query is built, ``DataFrame.localCheckpoint``
+is wrapped so that every call first writes the plan of the frame it is about
+to compute to <out-dir>/<q>_<tag>_iters/ckpt_<NN>_<description>.txt. NN
+counts from 01 for each query and <description> is the current Spark job
+description, i.e. the label ``operators.core.materialize`` sets. The wrapper
+is removed when the query function returns or raises.
 """
 
 from __future__ import annotations
@@ -13,10 +22,43 @@ from __future__ import annotations
 import argparse
 import contextlib
 import io
+import itertools
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from pyspark.sql.classic.dataframe import DataFrame  # noqa: E402
+
+
+def _write_plan(df: DataFrame, path: str) -> None:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    with open(path, "w") as f:
+        f.write(buf.getvalue())
+
+
+def dump_query(spark, name, fn, sf_dir: str, out: str, tag: str, iters: bool = False) -> None:
+    """Build query ``name`` with ``fn`` and write its final plan; with
+    ``iters``, also write every pre-checkpoint plan (module docstring)."""
+    checkpoint = DataFrame.localCheckpoint
+    if iters:
+        iter_dir = os.path.join(out, f"{name}_{tag}_iters")
+        os.makedirs(iter_dir, exist_ok=True)
+        seq = itertools.count(1)
+
+        def dumping_checkpoint(self, *args, **kwargs):
+            desc = self.sparkSession.sparkContext.getLocalProperty("spark.job.description")
+            _write_plan(self, os.path.join(iter_dir, f"ckpt_{next(seq):02d}_{desc}.txt"))
+            return checkpoint(self, *args, **kwargs)
+
+        DataFrame.localCheckpoint = dumping_checkpoint
+    try:
+        df = fn(spark, sf_dir)
+    finally:
+        DataFrame.localCheckpoint = checkpoint
+    _write_plan(df, os.path.join(out, f"{name}_{tag}.txt"))
 
 
 def main() -> None:
@@ -28,13 +70,13 @@ def main() -> None:
     ap.add_argument(
         "--iter",
         action="store_true",
-        help="also dump PER-ITERATION (pre-checkpoint) plans for iterative "
-        "operators: every materialize()/localCheckpoint routed through "
-        "operators.dedup.materialize writes its loop-body plan to "
-        "<out>/<query>_<tag>_iters/ (round-12 VERDICT item 6 — a final "
-        "explain of a checkpointed loop is a vacuous scan of the last "
-        "checkpoint; the loop-body plans are where Exchange/Join deltas "
-        "are visible)",
+        help="also dump the plan of every checkpoint a query computes while "
+        "it is built: DataFrame.localCheckpoint is wrapped for the duration "
+        "of each query and writes <out>/<query>_<tag>_iters/"
+        "ckpt_<NN>_<job description>.txt, numbered from 01 per query (the "
+        "final plan of a checkpointed loop is a vacuous scan of the last "
+        "checkpoint; the loop-body plans are where Exchange/Join deltas are "
+        "visible)",
     )
     args = ap.parse_args()
 
@@ -45,18 +87,7 @@ def main() -> None:
     os.makedirs(args.out, exist_ok=True)
     all_q = all_queries()
     for name in args.queries:
-        if args.iter:
-            os.environ["SPARK_GRAFT_PLAN_DUMP_DIR"] = os.path.join(
-                args.out, f"{name}_{args.tag}_iters"
-            )
-        df = all_q[name].fn(spark, args.sf_dir)
-        if args.iter:
-            os.environ.pop("SPARK_GRAFT_PLAN_DUMP_DIR", None)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        with open(os.path.join(args.out, f"{name}_{args.tag}.txt"), "w") as f:
-            f.write(buf.getvalue())
+        dump_query(spark, name, all_q[name].fn, args.sf_dir, args.out, args.tag, args.iter)
         print(name, "ok")
     spark.stop()
 
