@@ -5,10 +5,14 @@
 
 PY := python
 
-.PHONY: test parity-sf01 parity-sf1 parity-sf1-derived bench sweep
+.PHONY: test perfbench-test parity-sf01 parity-sf1 parity-sf1-derived bench sweep
 
 test:
 	$(PY) -m pytest tests/ -x -q
+
+# the benchmark's own tests (tail rule, seeds, tracer); no Spark session
+perfbench-test:
+	python3 -m pytest perfbench/tests -q
 
 parity-sf01:
 	$(PY) -m pytest tests/test_parity.py -q

@@ -11,7 +11,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 TABLES = (
@@ -224,20 +225,28 @@ def write_append(df: DataFrame, path: str, *, fmt: str = "parquet", partition_by
     writer.save(path)
 
 
+def observe_rows(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with a row counter attached: the next action on the returned
+    frame (a write) counts the rows it processes in the same job, and the
+    returned Observation reads them as ``obs.get["rows"]`` — no extra scan."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
+
+
 def compact(spark: SparkSession, path: str, *, target_files: int, fmt: str = "parquet") -> int:
     """Small-files compaction (the OPTIMIZE-style maintenance op): rewrite a
     table directory into ``target_files`` files via stage-then-swap.
 
     At 100 TB the small-files problem is the top operational failure mode of
     append-heavy pipelines — every micro-batch append adds files until scan
-    task-scheduling overhead dominates. Returns the row count (unchanged).
+    task-scheduling overhead dominates. Returns the row count (unchanged),
+    as the rewrite job observed it.
     """
-    import os
     import shutil
 
-    df = spark.read.format(fmt).load(path)
+    df, rows = observe_rows(spark.read.format(fmt).load(path).coalesce(target_files))
     staging = path + ".compacting"
-    df.coalesce(target_files).write.mode("overwrite").format(fmt).save(staging)
+    df.write.mode("overwrite").format(fmt).save(staging)
     shutil.rmtree(path)
     os.rename(staging, path)
-    return spark.read.format(fmt).load(path).count()
+    return rows.get["rows"]
