@@ -206,11 +206,8 @@ def read_csv(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
     return spark.read.csv(path, header=True, schema=schema)
 
 
-def read_json(spark: SparkSession, path: str, schema: T.StructType | None = None) -> DataFrame:
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
+def read_json(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
+    return spark.read.schema(schema).json(path)
 
 
 def write_append(df: DataFrame, path: str, *, fmt: str = "parquet", partition_by: list[str] | None = None) -> None:

@@ -462,14 +462,11 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         shingle_arrays,
     )
 
-    # checkpoint the |docs|-row ARRAY table, derive the exploded stream
-    # lazily, per-doc sizes in-row (round 13 — same restructure as
-    # q_dedup_ngram_jaccard; the shingle self-join's two sides share one
-    # exchange via ReusedExchange)
+    # checkpoint the |docs|-row ARRAY table (same shape as
+    # q_dedup_ngram_jaccard)
     shs = materialize(shingle_arrays(fan_out(load(spark, sf_dir, "documents"))))
-    sh = shs.select("doc_id", F.explode("shs").alias("shingle"))
     edges = materialize(
-        jaccard_pairs(sh, shs_arrays=shs)
+        jaccard_pairs(shs)
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
     )

@@ -16,6 +16,7 @@ import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from sales_data_pipeline_gcp_spark.io import NS_PER_SECOND, load
 from sales_data_pipeline_gcp_spark.plans.registry import register
@@ -94,6 +95,40 @@ _TUMBLE_SEC = TUMBLE_MINUTES * 60
 _SLIDE_W_SEC = SLIDE_WINDOW_MINUTES * 60
 _SLIDE_S_SEC = SLIDE_STEP_MINUTES * 60
 _GAP_US = SESSION_GAP_MINUTES * 60 * 1_000_000
+
+
+def _content_summary(df: DataFrame, prefix: str) -> DataFrame:
+    """One row: ``<prefix>_rows`` and ``<prefix>_hash``, an order-independent
+    content hash (sum of per-row xxhash64 over a NULL-marked concat of the
+    sorted columns, summed in DECIMAL so ANSI overflow cannot bite)."""
+    row_str = F.concat_ws(
+        "\x1f",
+        *[F.coalesce(F.col(c).cast("string"), F.lit("\\N")) for c in sorted(df.columns)],
+    )
+    return df.agg(
+        F.count("*").alias(f"{prefix}_rows"),
+        F.coalesce(F.sum(F.xxhash64(row_str).cast("decimal(38,0)")), F.lit(0)).alias(
+            f"{prefix}_hash"
+        ),
+    )
+
+
+def _with_batch_evidence(sink: DataFrame, batch: DataFrame) -> DataFrame:
+    """``sink`` with the batch-equivalence proof on every row: stream_rows /
+    batch_rows / rows_match / hash_match compare the streamed sink against
+    the same pipeline run as one batch. A streaming query has no oracle,
+    so the proof travels in its output."""
+    evidence = (
+        _content_summary(sink, "stream")
+        .crossJoin(F.broadcast(_content_summary(batch, "batch")))
+        .select(
+            "stream_rows",
+            "batch_rows",
+            (F.col("stream_rows") == F.col("batch_rows")).alias("rows_match"),
+            (F.col("stream_hash") == F.col("batch_hash")).alias("hash_match"),
+        )
+    )
+    return sink.crossJoin(F.broadcast(evidence))
 
 
 @register(
@@ -190,8 +225,6 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming",),
 )
 def q_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     from sales_data_pipeline_gcp_spark.cleaning import clean_sales
     from sales_data_pipeline_gcp_spark.io import read_sales_csv
     from sales_data_pipeline_gcp_spark.sources.sales import generate_rows, write_csv
@@ -208,33 +241,7 @@ def q_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sink = spark.read.parquet(out)
     batch = clean_sales(read_sales_csv(spark, raw), audit=False)
-
-    def summary(df: DataFrame, p: str) -> DataFrame:
-        row_str = F.concat_ws(
-            "\x1f",
-            *[
-                F.coalesce(F.col(c).cast("string"), F.lit("\\N"))
-                for c in sorted(df.columns)
-            ],
-        )
-        return df.agg(
-            F.count("*").alias(f"{p}_rows"),
-            F.coalesce(
-                F.sum(F.xxhash64(row_str).cast("decimal(38,0)")), F.lit(0)
-            ).alias(f"{p}_hash"),
-        )
-
-    evidence = (
-        summary(sink, "stream")
-        .crossJoin(F.broadcast(summary(batch, "batch")))
-        .select(
-            "stream_rows",
-            "batch_rows",
-            (F.col("stream_rows") == F.col("batch_rows")).alias("rows_match"),
-            (F.col("stream_hash") == F.col("batch_hash")).alias("hash_match"),
-        )
-    )
-    return sink.crossJoin(F.broadcast(evidence))
+    return _with_batch_evidence(sink, batch)
 
 
 @register(
@@ -287,8 +294,6 @@ STREAM_DEDUP_OVERLAP = 20
     tags=("streaming", "dedup"),
 )
 def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     base = tempfile.mkdtemp(prefix="stream_dedup_")
     raw = os.path.join(base, "raw")
     out = os.path.join(base, "out")
@@ -330,30 +335,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .csv(raw)
         .dropDuplicates(["event_id"])
     )
-
-    def summary(df: DataFrame, p: str) -> DataFrame:
-        row_str = F.concat_ws(
-            "\x1f",
-            *[F.coalesce(F.col(c).cast("string"), F.lit("\\N")) for c in sorted(df.columns)],
-        )
-        return df.agg(
-            F.count("*").alias(f"{p}_rows"),
-            F.coalesce(F.sum(F.xxhash64(row_str).cast("decimal(38,0)")), F.lit(0)).alias(
-                f"{p}_hash"
-            ),
-        )
-
-    evidence = (
-        summary(sink, "stream")
-        .crossJoin(F.broadcast(summary(batch, "batch")))
-        .select(
-            "stream_rows",
-            "batch_rows",
-            (F.col("stream_rows") == F.col("batch_rows")).alias("rows_match"),
-            (F.col("stream_hash") == F.col("batch_hash")).alias("hash_match"),
-        )
-    )
-    return sink.crossJoin(F.broadcast(evidence))
+    return _with_batch_evidence(sink, batch)
 
 
 #: Stream-stream join demo sizing: views/purchases per source file, user
@@ -361,6 +343,28 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 STREAM_JOIN_ROWS = 120
 STREAM_JOIN_USERS = 40
 STREAM_JOIN_HORIZON_MIN = 10
+
+
+def _interval_join(vdf: DataFrame, pdf: DataFrame, how: str) -> DataFrame:
+    """Views joined to purchases of the same user within
+    ``STREAM_JOIN_HORIZON_MIN`` minutes after the view; ``how`` is the join
+    type. Runs unchanged on streams and on batch frames."""
+    v = vdf.select("user_id", F.col("ts").alias("v_ts"), F.col("event_id").alias("view_id"))
+    p = pdf.select(
+        F.col("user_id").alias("p_user"),
+        F.col("ts").alias("p_ts"),
+        F.col("event_id").alias("purchase_id"),
+    )
+    return v.join(
+        p,
+        (F.col("user_id") == F.col("p_user"))
+        & (F.col("p_ts") >= F.col("v_ts"))
+        & (
+            F.col("p_ts")
+            <= F.col("v_ts") + F.expr(f"INTERVAL {STREAM_JOIN_HORIZON_MIN} MINUTES")
+        ),
+        how,
+    ).select("user_id", "view_id", "purchase_id")
 
 
 @register(
@@ -385,8 +389,6 @@ STREAM_JOIN_HORIZON_MIN = 10
     tags=("streaming", "join"),
 )
 def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     base = tempfile.mkdtemp(prefix="stream_join_")
     vdir, pdir = os.path.join(base, "views"), os.path.join(base, "purchases")
     out, ckpt = os.path.join(base, "out"), os.path.join(base, "ckpt")
@@ -423,23 +425,6 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     schema = "user_id BIGINT, ts TIMESTAMP, event_id BIGINT"
 
-    def interval_join(vdf: DataFrame, pdf: DataFrame) -> DataFrame:
-        v = vdf.select("user_id", F.col("ts").alias("v_ts"), F.col("event_id").alias("view_id"))
-        p = pdf.select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-            F.col("event_id").alias("purchase_id"),
-        )
-        return v.join(
-            p,
-            (F.col("user_id") == F.col("p_user"))
-            & (F.col("p_ts") >= F.col("v_ts"))
-            & (
-                F.col("p_ts")
-                <= F.col("v_ts") + F.expr(f"INTERVAL {STREAM_JOIN_HORIZON_MIN} MINUTES")
-            ),
-        ).select("user_id", "view_id", "purchase_id")
-
     # INNER stream-stream joins emit eagerly — the sink never depends on
     # watermark advancement (the watermark only bounds STATE here), so the
     # final no-data micro-batch is pure state-eviction overhead
@@ -457,7 +442,7 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withWatermark("ts", "30 minutes")
         )
         (
-            interval_join(vstream, pstream)
+            _interval_join(vstream, pstream, "inner")
             .writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)
@@ -468,31 +453,8 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sink = spark.read.parquet(out)
     read = lambda d: spark.read.schema(schema).option("header", "true").csv(d)
-    batch = interval_join(read(vdir), read(pdir))
-
-    def summary(df: DataFrame, p: str) -> DataFrame:
-        row_str = F.concat_ws(
-            "\x1f",
-            *[F.coalesce(F.col(c).cast("string"), F.lit("\\N")) for c in sorted(df.columns)],
-        )
-        return df.agg(
-            F.count("*").alias(f"{p}_rows"),
-            F.coalesce(F.sum(F.xxhash64(row_str).cast("decimal(38,0)")), F.lit(0)).alias(
-                f"{p}_hash"
-            ),
-        )
-
-    evidence = (
-        summary(sink, "stream")
-        .crossJoin(F.broadcast(summary(batch, "batch")))
-        .select(
-            "stream_rows",
-            "batch_rows",
-            (F.col("stream_rows") == F.col("batch_rows")).alias("rows_match"),
-            (F.col("stream_hash") == F.col("batch_hash")).alias("hash_match"),
-        )
-    )
-    return sink.crossJoin(F.broadcast(evidence))
+    batch = _interval_join(read(vdir), read(pdir), "inner")
+    return _with_batch_evidence(sink, batch)
 
 
 #: Left-outer stream-stream demo sizing: views per source file, user fan-in
@@ -534,8 +496,6 @@ STREAM_OUTER_HEARTBEAT_USER = 9_000
     tags=("streaming", "join"),
 )
 def q_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     base = tempfile.mkdtemp(prefix="stream_join_outer_")
     vdir, pdir = os.path.join(base, "views"), os.path.join(base, "purchases")
     out, ckpt = os.path.join(base, "out"), os.path.join(base, "ckpt")
@@ -576,24 +536,6 @@ def q_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     schema = "user_id BIGINT, ts TIMESTAMP, event_id BIGINT"
 
-    def interval_join(vdf: DataFrame, pdf: DataFrame) -> DataFrame:
-        v = vdf.select("user_id", F.col("ts").alias("v_ts"), F.col("event_id").alias("view_id"))
-        p = pdf.select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-            F.col("event_id").alias("purchase_id"),
-        )
-        return v.join(
-            p,
-            (F.col("user_id") == F.col("p_user"))
-            & (F.col("p_ts") >= F.col("v_ts"))
-            & (
-                F.col("p_ts")
-                <= F.col("v_ts") + F.expr(f"INTERVAL {STREAM_JOIN_HORIZON_MIN} MINUTES")
-            ),
-            "left_outer",
-        ).select("user_id", "view_id", "purchase_id")
-
     def stream(d: str) -> DataFrame:
         return (
             spark.readStream.schema(schema)
@@ -604,7 +546,7 @@ def q_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     with _stream_partitions(spark):
         (
-            interval_join(stream(vdir), stream(pdir))
+            _interval_join(stream(vdir), stream(pdir), "left_outer")
             .writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)
@@ -616,28 +558,5 @@ def q_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     real = F.col("user_id") < u  # heartbeat rows excluded on both engines
     sink = spark.read.parquet(out).filter(real)
     read = lambda d: spark.read.schema(schema).option("header", "true").csv(d)
-    batch = interval_join(read(vdir), read(pdir)).filter(real)
-
-    def summary(df: DataFrame, p: str) -> DataFrame:
-        row_str = F.concat_ws(
-            "\x1f",
-            *[F.coalesce(F.col(c).cast("string"), F.lit("\\N")) for c in sorted(df.columns)],
-        )
-        return df.agg(
-            F.count("*").alias(f"{p}_rows"),
-            F.coalesce(F.sum(F.xxhash64(row_str).cast("decimal(38,0)")), F.lit(0)).alias(
-                f"{p}_hash"
-            ),
-        )
-
-    evidence = (
-        summary(sink, "stream")
-        .crossJoin(F.broadcast(summary(batch, "batch")))
-        .select(
-            "stream_rows",
-            "batch_rows",
-            (F.col("stream_rows") == F.col("batch_rows")).alias("rows_match"),
-            (F.col("stream_hash") == F.col("batch_hash")).alias("hash_match"),
-        )
-    )
-    return sink.crossJoin(F.broadcast(evidence))
+    batch = _interval_join(read(vdir), read(pdir), "left_outer").filter(real)
+    return _with_batch_evidence(sink, batch)

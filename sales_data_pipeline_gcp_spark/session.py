@@ -27,16 +27,14 @@ def get_spark(
     app_name: str = "sales_data_pipeline_gcp_spark",
     *,
     cpus: int | None = None,
-    shuffle_partitions: int | None = None,
     driver_memory: str = "48g",
     extra: dict[str, str] | None = None,
 ) -> SparkSession:
     cpus = cpus or default_parallelism()
-    shuffle_partitions = shuffle_partitions or cpus
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

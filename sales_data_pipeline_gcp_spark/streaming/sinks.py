@@ -34,12 +34,10 @@ def upsert_sink(
         from pyspark.sql import functions as F
 
         latest = dedup_by_key(batch, [key], [F.col(order_col).desc()])
-        try:
-            current = spark.read.parquet(snapshot_dir)
-            exists = True
-        except Exception:
-            exists = False
-        merged = merge_upsert(current, latest, key) if exists else latest
+        # a missing snapshot is the first batch; any other read failure
+        # (a corrupt snapshot file) must surface, not start a new snapshot
+        exists = os.path.isdir(snapshot_dir)
+        merged = merge_upsert(spark.read.parquet(snapshot_dir), latest, key) if exists else latest
         # stage-then-swap: the merged plan READS the dir being replaced, so
         # write distributed to a staging dir and rename (no driver collect)
         staging = snapshot_dir + f".staging-{epoch_id}"

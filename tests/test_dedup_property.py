@@ -11,8 +11,9 @@ from hypothesis import strategies as st
 
 from sales_data_pipeline_gcp_spark.operators.dedup import (
     SHINGLE_WORDS,
+    _pair_overlap,
     jaccard_pairs,
-    shingles_from,
+    shingle_arrays,
 )
 
 WORDS = ["aa", "bb", "cc", "dd", "ee"]
@@ -37,12 +38,18 @@ def test_jaccard_matches_python(spark, seed):
         docs.append((len(docs), docs[0][1]))
 
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    got = {
-        (r.doc_a, r.doc_b): r.jaccard for r in jaccard_pairs(shingles_from(df)).collect()
+    shs = shingle_arrays(df)
+    got = {(r.doc_a, r.doc_b): r.jaccard for r in jaccard_pairs(shs).collect()}
+    got_overlap = {
+        (r.doc_a, r.doc_b): r.overlap
+        for r in _pair_overlap(shs)
+        .selectExpr("doc_a", "doc_b", "CAST(inter AS DOUBLE) / least(n_a, n_b) AS overlap")
+        .collect()
     }
 
     sh = {i: _py_shingles(t) for i, t in docs}
     expected = {}
+    expected_overlap = {}
     ids = sorted(sh)
     for i in ids:
         for j in ids:
@@ -50,7 +57,9 @@ def test_jaccard_matches_python(spark, seed):
                 inter = len(sh[i] & sh[j])
                 if inter:
                     expected[(i, j)] = inter / (len(sh[i]) + len(sh[j]) - inter)
+                    expected_overlap[(i, j)] = inter / min(len(sh[i]), len(sh[j]))
     assert got == expected, (seed, got, expected)
+    assert got_overlap == expected_overlap, (seed, got_overlap, expected_overlap)
 
 
 # --- connected components: three-way equivalence + diameter scaling --------
@@ -139,14 +148,11 @@ def test_small_star_output_meets_large_star_precondition(spark, seed):
 
 # --- stop-shingle drop: semantics + skew bound under adversarial corpora ---
 
-from pyspark.sql import functions as F
-
 from sales_data_pipeline_gcp_spark.operators.core import materialize
 from sales_data_pipeline_gcp_spark.operators.dedup import (
     lsh_candidate_pairs,
     minhash_signatures,
     drop_stop_shingles,
-    shingle_arrays,
 )
 
 
@@ -192,9 +198,7 @@ def test_stop_shingle_drop_bounds_candidate_blowup(spark):
     df = spark.createDataFrame(_stop_corpus(), "doc_id long, text string")
 
     def n_candidates(shs):
-        sig = materialize(
-            minhash_signatures(shs.select("doc_id", F.explode("shs").alias("shingle")))
-        )
+        sig = materialize(minhash_signatures(shs))
         return lsh_candidate_pairs(sig).count()
 
     shs_raw = materialize(shingle_arrays(df))
@@ -301,7 +305,7 @@ def test_prefix_filter_matches_exact_join(spark, seed):
     df = spark.createDataFrame(docs, "doc_id long, text string")
     got = {
         (r.doc_a, r.doc_b): r.jaccard
-        for r in prefix_filter_pairs(shingles_from(df)).collect()
+        for r in prefix_filter_pairs(shingle_arrays(df)).collect()
     }
 
     sh = {i: _py_shingles(t) for i, t in docs}
@@ -329,12 +333,12 @@ def test_prefix_filter_discards_boilerplate_skew(spark):
         for i in range(n)
     ]
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    sh = shingles_from(df)
-    n_cands = prefix_candidates(sh).count()
+    shs = shingle_arrays(df)
+    n_cands = prefix_candidates(shs).count()
     # shared-shingle bucket alone would contribute n*(n-1)/2 = 780 pairs
     assert n_cands < n, f"prefix filter failed to discard boilerplate: {n_cands} candidates"
     # and the verified output is exactly empty: no pair reaches J >= 0.5
-    assert prefix_filter_pairs(sh).count() == 0
+    assert prefix_filter_pairs(shs).count() == 0
 
 
 def test_blocking_quality_consistent_with_minhash(spark):

@@ -197,7 +197,7 @@ def test_minhash_signature_single_shuffle(spark, sf_dir):
     )
 
     shs = shingle_arrays(load(spark, sf_dir, "documents"))
-    plan = plan_str(minhash_signatures(shs.selectExpr("doc_id", "explode(shs) AS shingle")))
+    plan = plan_str(minhash_signatures(shs))
     assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) == 1
     assert len(re.findall(r"^\(\d+\) HashAggregate", plan, re.M)) == 2  # partial+final
 

@@ -1,17 +1,16 @@
 """Per-query profiler for the optimization rounds (guide §1/§7).
 
 Usage:
-    python tools/profile_query.py q_pagerank [q_other ...] [--runs 3]
-        [--explain-dir plans/r12 --explain-tag before]
+    python tools/profile_query.py q_pagerank [q_other ...] [--runs 3] [--sf-dir DIR]
 
 For each named query, in ONE session (UI enabled, REST API polled):
 
 - warm once (untimed), then time ``--runs`` noop-sink materializations;
 - after the timed runs, pull /api/v1 jobs+stages and aggregate, per query:
   #jobs, #stages, #tasks, per-stage wall, shuffle read/write bytes, input
-  bytes — the empirical loop's raw material;
-- optionally write ``<explain-dir>/<query>_<tag>.txt`` with
-  ``explain('formatted')`` (the committed plan evidence).
+  bytes — the empirical loop's raw material.
+
+Plans are written by ``tools/dump_plans.py``.
 
 Job boundaries per query are identified by setJobGroup labels (guide
 §1.5); the job description is left to ``materialize``, which names each
@@ -21,8 +20,6 @@ checkpoint job with its label.
 from __future__ import annotations
 
 import argparse
-import contextlib
-import io
 import json
 import os
 import sys
@@ -41,8 +38,6 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="+")
     ap.add_argument("--runs", type=int, default=3)
-    ap.add_argument("--explain-dir", default=None)
-    ap.add_argument("--explain-tag", default="before")
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     args = ap.parse_args()
 
@@ -65,18 +60,7 @@ def main() -> None:
         # the first build and the warm run (untimed: codegen + JIT) are
         # grouped apart from the timed runs
         sc.setJobGroup(f"warm:{name}", f"warm:{name}")
-        df = q.fn(spark, args.sf_dir)
-        if args.explain_dir:
-            os.makedirs(args.explain_dir, exist_ok=True)
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                df.explain("formatted")
-            plan = buf.getvalue()
-            with open(
-                os.path.join(args.explain_dir, f"{name}_{args.explain_tag}.txt"), "w"
-            ) as f:
-                f.write(plan)
-        df.write.format("noop").mode("overwrite").save()
+        q.fn(spark, args.sf_dir).write.format("noop").mode("overwrite").save()
         samples = []
         for i in range(args.runs):
             sc.setJobGroup(f"timed:{name}:{i}", f"timed:{name}:{i}")
